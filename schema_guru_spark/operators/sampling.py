@@ -55,7 +55,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 # sampling decisions hash through md5 over "<salt>:<id>" — the salt
 # decorrelates this operator's keep set from every other md5-keyed
@@ -155,16 +155,10 @@ def hash_split(df: DataFrame, id_col: str, fractions: dict[str, float],
     tok = F.substring(
         F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
         1, 8)
-    labels = list(fractions)
-    split = F.lit(labels[-1])  # open tail region
-    cum = 0.0
+    split = F.lit(list(fractions)[-1])  # open tail region
     # walk the boundaries in reverse so the earliest label's WHEN lands
     # outermost: CASE WHEN tok < thr_1 THEN l_1 WHEN tok < thr_2 ...
-    bounds: list[tuple[str, str]] = []
-    for label in labels[:-1]:
-        cum += fractions[label]
-        bounds.append((label, _rate_to_hex_threshold(cum)))
-    for label, thr in reversed(bounds):
+    for label, thr in reversed(split_thresholds(fractions)):
         split = F.when(tok < F.lit(thr), F.lit(label)).otherwise(split)
     return df.select(F.col(id_col).alias("id"), split.alias("split"),
                      tok.alias("split_token"))
@@ -175,11 +169,21 @@ def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
     compiles, for callers that need the same literals elsewhere (the
     DuckDB oracle twin embeds them so both engines compute the
     boundaries from ONE cumulative sum, not two float re-derivations).
-    The last label has no threshold (open tail) and is omitted."""
+    The last label has no threshold (open tail) and is omitted.
+
+    A non-tail cumulative fraction that rounds up to 1.0 (``{'a': 0.5,
+    'b': 0.5, 'c': 1e-10}`` sums to 1 within the tolerance) has no
+    8-hex-char threshold: every later label would silently come out
+    empty, so it is refused."""
     bounds, cum = [], 0.0
     for label in list(fractions)[:-1]:
         cum += fractions[label]
-        bounds.append((label, _rate_to_hex_threshold(cum)))
+        thr = _rate_to_hex_threshold(cum)
+        if thr is None:
+            raise ValueError(
+                f"cumulative fraction reaches {cum!r} at {label!r}, "
+                f"leaving no hash region for the labels after it")
+        bounds.append((label, thr))
     return bounds
 
 
@@ -349,6 +353,22 @@ def topk_by_score(scored: DataFrame, strata_col: str, id_col: str,
             f"passthrough column(s) {sorted(clash)} collide with the "
             f"operator's reserved output names (id, stratum, quality); "
             f"rename them before calling topk_by_score")
+    if isinstance(scored.schema[score_col].dataType,
+                  (T.FloatType, T.DoubleType)) and \
+            scored.where(F.isnan(score_col)).limit(1).count():
+        # the pandas pre-filter sorts NaN last, the window's F.desc
+        # ranks it first: the result would depend on partitioning
+        raise ValueError(f"{score_col!r} holds NaN scores; drop or "
+                         f"impute them before calling topk_by_score")
+    return _topk_by_score(scored, strata_col, id_col, score_col, k,
+                          compact_every)
+
+
+def _topk_by_score(scored: DataFrame, strata_col: str, id_col: str,
+                   score_col: str, k: int,
+                   compact_every: int = 64 * 1024) -> DataFrame:
+    """``topk_by_score`` without its NaN screen, for scores that cannot
+    be NaN by construction."""
     narrow = scored.select(
         F.col(id_col).alias("id"), F.col(strata_col).alias("stratum"),
         F.col(score_col).alias("quality"),
@@ -393,4 +413,6 @@ def quality_topk_per_stratum(df: DataFrame, text_col: str, id_col: str,
                        F.col(strata_col).alias("stratum"),
                        q["quality"].alias("quality"),
                        q["n_chars"].alias("n_chars"))
-    return topk_by_score(scored, "stratum", "id", "quality", k)
+    # the pinned score is a rounded sum of guarded ratios, never NaN:
+    # skip the screen, which would compute it over the text twice
+    return _topk_by_score(scored, "stratum", "id", "quality", k)

@@ -297,18 +297,28 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     return fn
 
 
-def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
-                     keep_state: bool = False):
-    """applyInPandas over the tiny per-(task,bucket) state rows.
+def bucket_passed(c: dict, max_err_rate: float) -> bool:
+    """The bucket pass rule over its counters.
 
     A bucket passes when its JSON parse-error rate (errors / attempted
-    JSON docs) is within ``max_err_rate`` and it has zero sha / lang
-    violations. Default 0.0 = strict (any parse error fails the bucket,
-    the reference's implicit semantics — parse failures are errors,
-    SchemaDerive.scala:159-169); production corpora with expected dirt
-    set a tolerance so verdicts discriminate instead of failing every
-    bucket. Either way every error row still lands in the violations
-    sink."""
+    JSON docs, 0 when it has none) is within ``max_err_rate`` and it has
+    zero sha / lang violations. Default 0.0 = strict (any parse error
+    fails the bucket, the reference's implicit semantics — parse
+    failures are errors, SchemaDerive.scala:159-169); production corpora
+    with expected dirt set a tolerance so verdicts discriminate instead
+    of failing every bucket. Either way every error row still lands in
+    the violations sink. Incremental validation re-applies the same
+    rule to counters summed across deltas."""
+    n_json = c["n_json_ok"] + c["n_json_err"]
+    err_rate = (c["n_json_err"] / n_json) if n_json else 0.0
+    return (err_rate <= max_err_rate and c["n_sha_bad"] == 0
+            and c["n_lang_bad"] == 0)
+
+
+def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
+                     keep_state: bool = False):
+    """applyInPandas over the tiny per-(task,bucket) state rows; the
+    verdict is ``bucket_passed`` over the summed counters."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(pdf["bucket"].iloc[0])
@@ -324,12 +334,8 @@ def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
                     c[k] += part.get(k, 0)
         schema_json = json.dumps(
             render(apply_transforms(acc, ctx), ctx), sort_keys=True)
-        n_json = c["n_json_ok"] + c["n_json_err"]
-        err_rate = (c["n_json_err"] / n_json) if n_json else 0.0
-        ok = (err_rate <= max_err_rate and c["n_sha_bad"] == 0
-              and c["n_lang_bad"] == 0)
         row = {"bucket": bucket, **c, "schema": schema_json,
-               "passed": ok}
+               "passed": bucket_passed(c, max_err_rate)}
         if keep_state:
             # the raw monoid state alongside the rendered schema:
             # serialized states from different runs re-merge exactly
@@ -346,6 +352,7 @@ _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
                    "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
                    "schema string, passed boolean")
 _VERDICT_SCHEMA_STATE = _VERDICT_SCHEMA + ", state string"
+_VIOLATION_SCHEMA = "bucket int, repo string, lang string, detail string"
 
 
 @dataclass
@@ -453,6 +460,10 @@ def validate_repo_table(
             "sha_ok", "lang_ok")
     )
 
+    verdict_schema = _VERDICT_SCHEMA_STATE if keep_state else _VERDICT_SCHEMA
+    if ckpt:
+        viol_path = f"{ckpt.dir}/violations"
+        verd_path = f"{ckpt.dir}/verdicts"
     all_verdicts = []
     all_violations = []
     for i in range(0, len(remaining), chunk_size):
@@ -469,8 +480,7 @@ def validate_repo_table(
                     .applyInPandas(
                         _combine_buckets(ctx, max_err_rate,
                                          keep_state=keep_state),
-                        _VERDICT_SCHEMA_STATE if keep_state
-                        else _VERDICT_SCHEMA))
+                        verdict_schema))
 
         if not ckpt:
             # materialize the tiny verdicts and the violation rows NOW so
@@ -479,9 +489,9 @@ def validate_repo_table(
             verdicts.count()
             violations = violations.persist()
             violations.count()
-        if ckpt:
-            viol_path = f"{ckpt.dir}/violations"
-            verd_path = f"{ckpt.dir}/verdicts"
+            all_verdicts.append(verdicts)
+            all_violations.append(violations)
+        else:
             # idempotent per-chunk sink: OVERWRITE this chunk's
             # partition directory rather than appending to the parent.
             # A job killed after the data append but before the
@@ -490,34 +500,34 @@ def validate_repo_table(
             # chunk; an overwrite converges to the same bytes.
             violations.write.mode("overwrite") \
                 .parquet(f"{viol_path}/chunk={chunk[0]}")
-            verdicts.write.mode("overwrite") \
+            # the chunk's verdicts (one row per bucket) come to the
+            # driver once: they are written back as one file and give
+            # the manifest its metrics without re-reading the sink
+            rows = verdicts.toPandas()
+            spark.createDataFrame(rows, verdict_schema).coalesce(1) \
+                .write.mode("overwrite") \
                 .parquet(f"{verd_path}/chunk={chunk[0]}")
-            metrics = [r.asDict() for r in
-                       spark.read.parquet(verd_path)
-                       .where(F.col("bucket").isin(chunk))
-                       .select("bucket", "n_rows",
-                               F.col("n_json_ok").alias("n_ok"),
-                               F.col("n_json_err").alias("n_err"),
-                               "passed").collect()]
+            metrics = [{"bucket": int(r.bucket), "n_rows": int(r.n_rows),
+                        "n_ok": int(r.n_json_ok), "n_err": int(r.n_json_err),
+                        "passed": bool(r.passed)}
+                       for r in rows.itertuples()]
             seen = {m["bucket"] for m in metrics}
             metrics.extend({"bucket": b, "n_rows": 0, "n_ok": 0, "n_err": 0,
                             "passed": True} for b in chunk if b not in seen)
             ckpt.record_done(metrics)
-        else:
-            all_verdicts.append(verdicts)
-            all_violations.append(violations)
         raw.unpersist()
 
     if ckpt:
-        # chunk=N partition dirs: drop the inferred partition column
-        verdicts_df = spark.read.parquet(f"{ckpt.dir}/verdicts") \
-            .drop("chunk")
+        # the engine wrote both sinks, so their schemas are known: no
+        # footer-inference job. chunk=N partition dirs: drop the
+        # discovered partition column
+        verdicts_df = spark.read.schema(verdict_schema) \
+            .parquet(verd_path).drop("chunk")
         try:
-            violations_df = spark.read.parquet(f"{ckpt.dir}/violations") \
-                .drop("chunk")
+            violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
+                .parquet(viol_path).drop("chunk")
         except Exception:
-            violations_df = spark.createDataFrame(
-                [], "bucket int, repo string, lang string, detail string")
+            violations_df = spark.createDataFrame([], _VIOLATION_SCHEMA)
     else:
         from functools import reduce
         verdicts_df = reduce(DataFrame.unionByName, all_verdicts)

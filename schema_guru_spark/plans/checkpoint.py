@@ -16,7 +16,8 @@ import os
 import time
 from typing import Iterable, Optional, Set
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_SCHEMA = ("bucket int, status string, n_rows bigint, "
                    "n_ok bigint, n_err bigint, metrics string, "
@@ -32,39 +33,44 @@ class CheckpointManager:
         self.run_id = run_id or f"run-{int(time.time() * 1000)}"
 
     def _manifest_exists(self) -> bool:
-        # works for local paths; for object stores the read itself is the probe
-        try:
-            self.spark.read.parquet(self.manifest_path).limit(1).collect()
-            return True
-        except Exception:
-            return False
+        # a Hadoop FileSystem probe, so object-store paths work too; a
+        # failing spark.read would log a FileNotFoundException stack
+        # trace on every fresh checkpoint dir
+        jvm = self.spark._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self.manifest_path)
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.exists(path)
 
     def finished_buckets(self) -> Set[int]:
         if not self._manifest_exists():
             return set()
-        rows = (self.spark.read.parquet(self.manifest_path)
-                .where(F.col("status") == "done")
-                .select("bucket").distinct().collect())
-        return {r["bucket"] for r in rows}
+        # a few rows per bucket: de-duplicated on the driver, which saves
+        # the distinct's shuffle
+        rows = self.manifest().select("bucket", "status").collect()
+        return {r["bucket"] for r in rows if r["status"] == "done"}
 
     def record_done(self, bucket_metrics: Iterable[dict]) -> None:
         """Append one manifest row per finished bucket.
         Each dict: {bucket, n_rows, n_ok, n_err, **extra}."""
-        now = time.time()
-        rows = [
-            (int(m["bucket"]), "done", int(m.get("n_rows", 0)),
-             int(m.get("n_ok", 0)), int(m.get("n_err", 0)),
-             json.dumps({k: v for k, v in m.items()
-                         if k not in ("bucket", "n_rows", "n_ok", "n_err")},
-                        sort_keys=True, default=str),
-             self.run_id, now)
-            for m in bucket_metrics
-        ]
-        if not rows:
+        rows = pd.DataFrame(
+            [(int(m["bucket"]), "done", int(m.get("n_rows", 0)),
+              int(m.get("n_ok", 0)), int(m.get("n_err", 0)),
+              json.dumps({k: v for k, v in m.items()
+                          if k not in ("bucket", "n_rows", "n_ok", "n_err")},
+                         sort_keys=True, default=str))
+             for m in bucket_metrics],
+            columns=["bucket", "status", "n_rows", "n_ok", "n_err",
+                     "metrics"])
+        if rows.empty:
             return
+        rows["run_id"] = self.run_id
+        rows["finished_at"] = time.time()
+        # a pandas frame crosses to the JVM through Arrow as a local
+        # relation; a list of tuples would ship as a pickled Python RDD
         (self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
          .coalesce(1)
          .write.mode("append").parquet(self.manifest_path))
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.manifest_path)
+        return self.spark.read.schema(MANIFEST_SCHEMA) \
+            .parquet(self.manifest_path)

@@ -40,6 +40,17 @@ re-scanned:
     count" check, made incremental. (Per-delta exact distincts do
     not sum; sketches do.)
 
+Per-call job budget. One incremental call over a one-chunk delta
+launches 14 Spark jobs, however long the committed chain is: the
+delta's schema read (1), the scan pass into the violation sink (1), the
+bucket combine collected to the driver (2), the verdict sink and the
+manifest append (2, both written from driver-held rows), the delta
+report (1), the violation count (2), the key sketch (2), the cumulative
+verdict collect (1) and the sketch union (2). Every sink the engine
+wrote is read back with its known schema, so no read runs a
+footer-inference job, and no sink is re-read to build metrics the
+driver already holds. Each further chunk adds the 5 per-chunk jobs.
+
 A non-append snapshot (delete / overwrite) in the window makes
 "the new rows" ill-defined (rows also vanished), so
 ``plan_incremental`` refuses. Policy here: ``on_nonappend="error"``
@@ -56,11 +67,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _STATE_FILE = "table_state.json"
+_UNIQ_SCHEMA = "n_rows bigint, sketch binary"
 
 
 def _state_path(checkpoint_dir: str) -> str:
@@ -246,22 +259,19 @@ def incremental_validate(
             n_buckets=n_buckets, n_salts=n_salts,
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
-        agg = res.verdicts.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_json_ok").alias("json_ok"),
-            F.sum("n_json_err").alias("json_err"),
-            F.sum("n_sha_bad").alias("sha_bad"),
-            F.sum(F.when(F.col("passed"), 1).otherwise(0))
-             .alias("passed"),
-            F.count(F.lit(1)).alias("buckets")).collect()[0]
-        _write_uniq_sketch(delta_dir, delta_df, int(agg["rows"] or 0))
+        # one verdict row per bucket: summed on the driver, which saves
+        # a global aggregate's shuffle
+        rows = res.verdicts.select("n_rows", "n_json_ok", "n_json_err",
+                                   "n_sha_bad", "passed").collect()
+        n_rows = sum(r["n_rows"] for r in rows)
+        _write_uniq_sketch(delta_dir, delta_df, n_rows)
         delta_report = {
-            "rows": agg["rows"] or 0,
-            "json_ok": agg["json_ok"] or 0,
-            "json_err": agg["json_err"] or 0,
-            "sha_bad": agg["sha_bad"] or 0,
-            "buckets": agg["buckets"],
-            "buckets_passed": agg["passed"] or 0,
+            "rows": n_rows,
+            "json_ok": sum(r["n_json_ok"] for r in rows),
+            "json_err": sum(r["n_json_err"] for r in rows),
+            "sha_bad": sum(r["n_sha_bad"] for r in rows),
+            "buckets": len(rows),
+            "buckets_passed": sum(1 for r in rows if r["passed"]),
             "n_violation_rows": res.violations.count(),
             "resumed_buckets": len(res.resumed_buckets),
         }
@@ -294,6 +304,8 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import ZERO, loads, merge, render
     from schema_guru_spark.core.transforms import apply_transforms
+    from schema_guru_spark.pipeline import (_VERDICT_SCHEMA_STATE,
+                                            bucket_passed)
 
     state = _load_state(checkpoint_dir)
     if state is None:
@@ -305,38 +317,32 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                 "buckets_passed": 0, "pass_rate": 1.0}
 
     # one read per delta (each verdicts sink has its own chunk=N
-    # partition layout; a multi-root read trips partition discovery)
-    from functools import reduce
+    # partition layout; a multi-root read trips partition discovery),
+    # each with the schema the engine wrote it under: no footer-inference
+    # job per committed window
+    counters = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
+                "n_lang_bad")
     verdicts = reduce(DataFrame.unionByName, [
-        spark.read.option("basePath", os.path.join(d, "verdicts"))
-             .parquet(os.path.join(d, "verdicts")).drop("chunk")
+        spark.read.schema(_VERDICT_SCHEMA_STATE)
+             .option("basePath", os.path.join(d, "verdicts"))
+             .parquet(os.path.join(d, "verdicts"))
+             .select("bucket", *counters, "state")
         for d in dirs])
-    per_bucket = (verdicts.groupBy("bucket").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_json_ok").alias("n_json_ok"),
-        F.sum("n_json_err").alias("n_json_err"),
-        F.sum("n_sha_bad").alias("n_sha_bad"),
-        F.sum("n_lang_bad").alias("n_lang_bad"))
-        .withColumn(
-            "passed",
-            (F.coalesce(F.col("n_json_err") /
-                        F.greatest(F.col("n_json_ok") +
-                                   F.col("n_json_err"), F.lit(1)),
-                        F.lit(0.0)) <= max_err_rate)
-            & (F.col("n_sha_bad") == 0) & (F.col("n_lang_bad") == 0))
-        ).collect()
-
-    # cross-delta schema: merge the raw states (driver-side fan-in
-    # over <= n_deltas * n_buckets tiny rows, same shape as the infer
-    # operators' final combine)
+    # ONE collect of <= n_deltas * n_buckets tiny rows: counters sum per
+    # bucket and the raw states monoid-merge (commutative, so delta order
+    # cannot matter) on the driver, the same fan-in shape as the infer
+    # operators' final combine
     ctx = SchemaContext.make(0)
-    states = verdicts.select("bucket", "state").collect()
+    sums: dict[int, dict] = {}
     by_bucket: dict[int, dict] = {}
     glob = ZERO
-    for r in states:
+    for r in verdicts.collect():
+        b = r["bucket"]
+        c = sums.setdefault(b, dict.fromkeys(counters, 0))
+        for k in counters:
+            c[k] += r[k]
         st = loads(r["state"])
-        by_bucket[r["bucket"]] = merge(
-            by_bucket.get(r["bucket"], ZERO), st, ctx)
+        by_bucket[b] = merge(by_bucket.get(b, ZERO), st, ctx)
         glob = merge(glob, st, ctx)
     global_schema = render(apply_transforms(glob, ctx), ctx)
 
@@ -344,7 +350,9 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                   if os.path.isdir(os.path.join(d, "uniq"))]
     uniq: dict[str, Any] = {}
     if uniq_paths:
-        u = (spark.read.parquet(*uniq_paths)
+        sketches = reduce(DataFrame.unionByName, [
+            spark.read.schema(_UNIQ_SCHEMA).parquet(p) for p in uniq_paths])
+        u = (sketches
              .agg(F.sum("n_rows").alias("n_rows"),
                   F.hll_sketch_estimate(F.hll_union_agg("sketch"))
                    .alias("n_distinct_est"))).collect()[0]
@@ -354,20 +362,18 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                 "rel_gap": round(gap, 6),
                 "uniq_ok": gap <= uniq_tolerance}
 
-    total = {k: sum(r[k] for r in per_bucket)
-             for k in ("n_rows", "n_json_ok", "n_json_err",
-                       "n_sha_bad", "n_lang_bad")}
-    passed = sum(1 for r in per_bucket if r["passed"])
+    total = {k: sum(c[k] for c in sums.values()) for k in counters}
+    passed = sum(1 for c in sums.values()
+                 if bucket_passed(c, max_err_rate))
     return {
         "n_deltas": len(dirs),
         "rows": total["n_rows"], "json_ok": total["n_json_ok"],
         "json_err": total["n_json_err"], "sha_bad": total["n_sha_bad"],
         "lang_bad": total["n_lang_bad"],
-        "buckets": len(per_bucket), "buckets_passed": passed,
+        "buckets": len(sums), "buckets_passed": passed,
         # zero observed buckets = vacuously passing (an empty or fully
         # filtered table has no failing partition)
-        "pass_rate": (round(passed / len(per_bucket), 4)
-                      if per_bucket else 1.0),
+        "pass_rate": (round(passed / len(sums), 4) if sums else 1.0),
         "uniqueness": uniq,
         "schema": global_schema,
         "bucket_schemas": {

@@ -144,42 +144,97 @@ N_BUCKETS = 8
 
 def _run(spark, tp, ckpt, **kw):
     from schema_guru_spark.plans.incremental import incremental_validate
-    return incremental_validate(spark, tp, ckpt, n_buckets=N_BUCKETS,
-                                allowed_langs=("json",), **kw)
+    kw.setdefault("allowed_langs", ("json",))
+    return incremental_validate(spark, tp, ckpt, n_buckets=N_BUCKETS, **kw)
+
+
+def _buckets(spark, rows):
+    """Each row's validation bucket, as the pipeline computes it."""
+    from schema_guru_spark.pipeline import bucket_expr
+    df = spark.createDataFrame([(r["repo"], r["path"]) for r in rows],
+                               "repo string, path string")
+    return [r[0] for r in df.select(bucket_expr(N_BUCKETS, 8)).collect()]
+
+
+def _edge_rows(spark, prior, no_json_bucket=0, rate_bucket=1):
+    """A delta that puts the cumulative ``rate_bucket`` EXACTLY at a
+    JSON error rate of 1/4 and leaves ``no_json_bucket`` with no JSON
+    rows at all (``prior`` must have none there)."""
+    cand = _vrows(200, "c9", start=900)
+    cb = _buckets(spark, cand)
+    pb = _buckets(spark, prior)
+    assert no_json_bucket not in pb
+    n_prior = pb.count(rate_bucket)           # all valid JSON
+    k = max(1, -(-n_prior // 3))              # k / (n_prior + m + k) = 1/4
+    m = 3 * k - n_prior
+    in_rate = [r for r, b in zip(cand, cb) if b == rate_bucket]
+    in_none = [r for r, b in zip(cand, cb) if b == no_json_bucket]
+    assert len(in_rate) >= k + m and len(in_none) >= 2
+    out = in_rate[:m]
+    for r in in_rate[m:m + k]:
+        content = "{bad"
+        out.append({**r, "content": content, "content_sha":
+                    hashlib.sha256(content.encode()).hexdigest()})
+    for r in in_none[:2]:
+        content = "print(1)"
+        out.append({**r, "lang": "py", "content": content, "content_sha":
+                    hashlib.sha256(content.encode()).hexdigest()})
+    return out
 
 
 def test_incremental_validate_end_to_end(spark, tmp_path):
-    tp = str(tmp_path / "repos")
-    ckpt = str(tmp_path / "ckpt")
-    append_snapshot(tp, _vrows(40, "c1"), SCHEMA, partition_by="lang")
+    # strict, and a tolerance that a bucket reaches exactly
+    for max_err_rate in (0.0, 0.25):
+        _check_end_to_end(spark, tmp_path / str(max_err_rate), max_err_rate)
 
-    r1 = _run(spark, tp, ckpt)
+
+def _check_end_to_end(spark, root, max_err_rate):
+    tp = str(root / "repos")
+    ckpt = str(root / "ckpt")
+    kw = dict(max_err_rate=max_err_rate)
+    base = _vrows(40, "c1")
+    extra = _vrows(20, "c2", extra_key=True, start=500)
+    if max_err_rate:
+        # the edge delta below needs one bucket free of JSON; py rows
+        # are allowed so that bucket passes on its (absent) JSON alone
+        kw["allowed_langs"] = ("json", "py")
+        base, extra = ([r for r, b in zip(rows, _buckets(spark, rows))
+                        if b != 0] for rows in (base, extra))
+    append_snapshot(tp, base, SCHEMA, partition_by="lang")
+
+    r1 = _run(spark, tp, ckpt, **kw)
     assert r1["mode"] == "baseline"
-    assert r1["delta"]["rows"] == 40
-    assert r1["cumulative"]["rows"] == 40
+    assert r1["delta"]["rows"] == len(base)
+    assert r1["cumulative"]["rows"] == len(base)
     assert r1["cumulative"]["pass_rate"] == 1.0
     assert r1["cumulative"]["uniqueness"]["uniq_ok"]
 
     # nothing new -> no work, same cumulative
-    r2 = _run(spark, tp, ckpt)
+    r2 = _run(spark, tp, ckpt, **kw)
     assert r2["mode"] == "up-to-date"
     assert r2["delta"]["rows"] == 0
-    assert r2["cumulative"]["rows"] == 40
+    assert r2["cumulative"]["rows"] == len(base)
 
-    # append 20 rows whose docs carry an extra uuid key, then validate:
+    # append rows whose docs carry an extra uuid key, then validate:
     # ONLY the delta is scanned, but the cumulative schema must show
     # the union of both windows' key sets
-    append_snapshot(tp, _vrows(20, "c2", extra_key=True, start=500),
-                    SCHEMA, partition_by="lang")
-    r3 = _run(spark, tp, ckpt)
+    append_snapshot(tp, extra, SCHEMA, partition_by="lang")
+    r3 = _run(spark, tp, ckpt, **kw)
+    n_rows = len(base) + len(extra)
     assert r3["mode"] == "incremental"
-    assert r3["delta"]["rows"] == 20          # not 60
-    assert r3["cumulative"]["rows"] == 60
+    assert r3["delta"]["rows"] == len(extra)      # not n_rows
+    assert r3["cumulative"]["rows"] == n_rows
     assert r3["cumulative"]["n_deltas"] == 2
     props = r3["cumulative"]["schema"]["properties"]
     assert set(props) == {"i", "u"}
-    assert r3["cumulative"]["uniqueness"]["n_rows"] == 60
+    assert r3["cumulative"]["uniqueness"]["n_rows"] == n_rows
     assert r3["cumulative"]["uniqueness"]["uniq_ok"]
+    final = r3
+    if max_err_rate:
+        edge = _edge_rows(spark, base + extra)
+        append_snapshot(tp, edge, SCHEMA, partition_by="lang")
+        final = _run(spark, tp, ckpt, **kw)
+        assert final["cumulative"]["rows"] == n_rows + len(edge)
 
     # EXACT parity with a from-scratch full validation of the table
     from schema_guru_spark.core.context import SchemaContext
@@ -188,21 +243,61 @@ def test_incremental_validate_end_to_end(spark, tmp_path):
     from schema_guru_spark.pipeline import validate_repo_table
     full = validate_repo_table(spark, read_iceberg(spark, tp),
                                n_buckets=N_BUCKETS,
-                               allowed_langs=("json",),
+                               allowed_langs=kw.get("allowed_langs",
+                                                    ("json",)),
+                               max_err_rate=max_err_rate,
                                keep_state=True)
     ctx = SchemaContext.make(0)
     acc = ZERO
     for row in full.verdicts.select("state").collect():
         acc = merge(acc, loads(row["state"]), ctx)
     assert render(apply_transforms(acc, ctx), ctx) == \
-        r3["cumulative"]["schema"]
+        final["cumulative"]["schema"]
     from pyspark.sql import functions as F
     frow = full.verdicts.agg(
         F.sum("n_rows"), F.sum("n_json_ok"), F.sum("n_json_err")
     ).collect()[0]
     assert (frow[0], frow[1], frow[2]) == (
-        r3["cumulative"]["rows"], r3["cumulative"]["json_ok"],
-        r3["cumulative"]["json_err"])
+        final["cumulative"]["rows"], final["cumulative"]["json_ok"],
+        final["cumulative"]["json_err"])
+    # the cumulative verdicts re-apply the scan's pass rule to summed
+    # counters: they must agree with the full scan's, edges included
+    verdicts = {r["bucket"]: r for r in full.verdicts.collect()}
+    assert final["cumulative"]["buckets_passed"] == \
+        sum(r["passed"] for r in verdicts.values())
+    if max_err_rate:
+        at_rate, no_json = verdicts[1], verdicts[0]
+        assert at_rate["n_json_err"] / (
+            at_rate["n_json_ok"] + at_rate["n_json_err"]) == max_err_rate
+        assert at_rate["passed"]
+        assert no_json["n_json_ok"] + no_json["n_json_err"] == 0
+        assert no_json["passed"]
+
+
+def test_incremental_job_count_is_constant(spark, tmp_path):
+    """One incremental re-validation launches the same Spark jobs
+    however long the committed window chain is: no per-window schema
+    inference, no re-read of a sink the call has just written."""
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(40, "c1"), SCHEMA, partition_by="lang")
+    _run(spark, tp, ckpt)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for i in range(1, 6):
+            append_snapshot(tp, _vrows(8, f"d{i}", start=100 * i), SCHEMA,
+                            partition_by="lang")
+            group = f"incremental-jobs-{i}"
+            sc.setJobGroup(group, group)
+            r = _run(spark, tp, ckpt)
+            assert r["mode"] == "incremental"
+            jobs[i] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[2] == jobs[5], jobs
+    assert jobs[5] <= 17, jobs
 
 
 def test_incremental_uniqueness_catches_cross_delta_dups(spark,

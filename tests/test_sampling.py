@@ -198,6 +198,20 @@ def test_topk_ties_break_by_id(spark):
     assert [(r["rank"], r["id"]) for r in out] == [(1, 3), (2, 7)]
 
 
+def test_topk_rejects_nan_scores(spark):
+    """The pandas pre-filter sorts NaN last and the window's F.desc
+    ranks it first, so a NaN score would make the top-k depend on
+    partitioning: it is refused, whichever partition holds it."""
+    rows = [(i, "s", float(i)) for i in range(8)] + [(99, "s", math.nan)]
+    df = spark.createDataFrame(rows, "id long, stratum string, "
+                                     "quality double").repartition(2)
+    assert df.rdd.glom().map(
+        lambda p: any(math.isnan(r["quality"]) for r in p)
+    ).collect().count(True) == 1
+    with pytest.raises(ValueError, match="NaN"):
+        SMP.topk_by_score(df, "stratum", "id", "quality", 3)
+
+
 def test_stratified_sample_streams_stateless(spark, tmp_path, corpus):
     """stratified_sample is a pure projection+filter, so the SAME
     function applies unchanged to a streaming DataFrame: stream==batch
@@ -307,6 +321,10 @@ def test_hash_split_is_map_only_and_guards(spark, corpus):
         SMP.hash_split(df, "id", {"train": 1.0, "val": 0.0})
     with pytest.raises(ValueError, match="sum to 1"):
         SMP.hash_split(df, "id", {"train": 0.5, "val": 0.1})
+    # sums to 1 within tolerance, but 'b' closes the hash space and
+    # would leave 'c' silently empty
+    with pytest.raises(ValueError, match="'b'"):
+        SMP.hash_split(df, "id", {"a": 0.5, "b": 0.5, "c": 1e-10})
     # split_thresholds mirrors the compiled boundaries: one per label
     # except the open-tail last, each 8 hex chars
     bounds = SMP.split_thresholds({"train": 0.8, "val": 0.1, "test": 0.1})
