@@ -31,7 +31,6 @@ from typing import Any
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.formats import suggest_base64, suggest_format
 from schema_guru_spark.core.microschema import (
-    _eq_or_none,
     _int_as_num,
     _max_or_none,
     _merge_num,

@@ -1,4 +1,9 @@
-"""Columnar batch fold — the next cut on the executor hot path.
+"""Columnar batch fold — the executor hot path.
+
+``fold_keyed(texts, keys, ctx)`` is the one parse -> gate -> fold
+kernel every map-side host runs: global inference (no key), keyed
+inference (per key), the validation scan pass (per bucket) and the
+keyed schema stream (per group). It feeds ``fold_docs``.
 
 ``fold_docs(acc, docs, ctx)`` is semantically identical to
 
@@ -50,7 +55,15 @@ from datetime import datetime
 
 import re
 
-from schema_guru_spark.core.accumulate import accumulate, accumulate_doc
+import numpy as np
+import pandas as pd
+
+from schema_guru_spark.core import json_fast
+from schema_guru_spark.core.accumulate import (
+    accumulate,
+    accumulate_doc,
+    gate_error_message,
+)
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.formats import (
     IPV4_RE,
@@ -63,6 +76,117 @@ from schema_guru_spark.core.formats import (
 
 # shape prefilter for the date-time column verifier (see _fmt_survives)
 _DT_SHAPE_RE = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}[T ]")
+
+
+def _enum_order_sensitive(ctx: SchemaContext) -> bool:
+    """True when the enum machinery is live. The reference's enum merge
+    checks size on the CONCATENATION before distinct
+    (SchemaWithEnum.scala:57-70, pinned by
+    test_concat_size_check_precedes_distinct), which is neither
+    commutative nor associative — merging partial states in task-
+    completion order would make the inferred enums depend on the
+    scheduler. Such contexts fold rows in ROW order within a batch
+    (``fold_keyed``) and partial states in PARTITION ORDER on the
+    driver instead of through the combine tree: the result is
+    deterministic for a fixed input partitioning (the reference's own
+    Spark job folds the same non-commutative merge through
+    RDD.aggregate with no ordering guarantee at all,
+    SchemaGuruRDD.scala:44-60)."""
+    return ctx.enum_cardinality > 0 or bool(ctx.enum_sets)
+
+
+def fold_keyed(texts, keys, ctx: SchemaContext,
+               states: dict | None = None, counts: dict | None = None, *,
+               loads=json_fast.loads, ctx_by_key: dict | None = None):
+    """Parse, gate and fold one batch of JSON texts into per-key
+    accumulators. ``keys`` is an array aligned with ``texts``, or None
+    (every row has key None). NULL keys are the key None.
+
+    Unique-document fast path: texts are ``pd.factorize``d once and each
+    DISTINCT text is parsed once (``loads``, injectable so tests can
+    count calls) and gated once (objects/arrays only, the reference's
+    message for scalars — ``gate_error_message``). One ``np.unique``
+    over a fused (key, text) code gives each pair's multiplicity; a doc
+    seen n >= 2 times under a key enters that key's batch twice (the
+    monoid stabilizes after one self-merge — test_merge_self_stabilizes)
+    and each key's batch folds through ``fold_docs``. JSON-bearing
+    corpora are heavily duplicated, so this cuts the per-doc Python
+    work from O(rows) to O(distinct (key, doc)). Enum-bearing contexts
+    fold every row in row order instead (see ``_enum_order_sensitive``):
+    the collapse reorders documents.
+
+    ``ctx_by_key`` maps a key to the context its documents fold under
+    (segmented mode's per-segment ``quantity``). ``states`` and
+    ``counts`` are folded into in place when given — task-private
+    accumulators carried across batches.
+
+    Returns ``(states, counts, errors)``: key -> accumulator (keys with
+    at least one valid doc), key -> [n_ok, n_err] (every key seen), and
+    one ``(row, key, message)`` per failing row, in row order.
+    """
+    states = {} if states is None else states
+    counts = {} if counts is None else counts
+    codes, uniques = pd.factorize(texts, use_na_sentinel=True)
+    # slot 0 is the NULL text, slot c + 1 the distinct text c
+    values: list = [None]
+    msgs: list = ["null content"]
+    for text in uniques:
+        try:
+            value = loads(text)
+        except (ValueError, TypeError) as e:
+            values.append(None)
+            msgs.append(f"invalid JSON: {e}")
+            continue
+        values.append(value)
+        msgs.append(None if isinstance(value, (dict, list))
+                    else gate_error_message(value))
+    slots = codes + 1
+    if keys is None:
+        kcodes = np.zeros(len(slots), dtype=slots.dtype)
+        kvals: list = [None]
+    else:
+        kcodes, kuniq = pd.factorize(keys, use_na_sentinel=True)
+        kvals = kuniq.tolist() + [None]
+        kcodes = np.where(kcodes < 0, len(kuniq), kcodes)
+    width = len(msgs)
+    fused = kcodes * width + slots
+    if _enum_order_sensitive(ctx):
+        # ROW ORDER: the (key, doc) collapse lists a key's documents in
+        # first-appearance order with duplicates adjacent, which changes
+        # order-sensitive enum merges. Parsing stays once per text.
+        pairs = zip(fused.tolist(), [1] * len(fused))
+    else:
+        ukey, mult = np.unique(fused, return_counts=True)
+        pairs = zip(ukey.tolist(), mult.tolist())
+    docs: dict = {}
+    for f, n in pairs:
+        kc, slot = divmod(f, width)
+        key = kvals[kc]
+        c = counts.get(key)
+        if c is None:
+            c = counts[key] = [0, 0]
+        if msgs[slot] is not None:
+            c[1] += n
+            continue
+        c[0] += n
+        batch = docs.get(key)
+        if batch is None:
+            batch = docs[key] = []
+        batch.append(values[slot])
+        if n > 1:
+            batch.append(values[slot])
+    for key, batch in docs.items():
+        st = states.get(key)
+        if st is None:
+            st = states[key] = {}
+        fold_docs(st, batch, ctx if ctx_by_key is None
+                  else ctx_by_key.get(key, ctx))
+    bad = np.array([m is not None for m in msgs])
+    rows = np.flatnonzero(bad[slots])
+    errors = [(i, kvals[kc], msgs[slot]) for i, kc, slot in
+              zip(rows.tolist(), kcodes[rows].tolist(),
+                  slots[rows].tolist())]
+    return states, counts, errors
 
 
 def fold_docs(acc: dict, docs: list, ctx: SchemaContext) -> dict:

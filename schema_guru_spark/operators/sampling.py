@@ -277,7 +277,8 @@ def pack_sequences(df: DataFrame, id_col: str, token_col: str,
 
     Contract: ids must be UNIQUE — the packing order is "id ascending",
     and duplicate ids would make the intra-partition cumsum order (and
-    so the whole packing) nondeterministic.
+    so the whole packing) nondeterministic. Token counts must be
+    non-NULL: refused with a ValueError.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
@@ -285,6 +286,12 @@ def pack_sequences(df: DataFrame, id_col: str, token_col: str,
         raise ValueError(f"n_ranges must be >= 1, got {n_ranges}")
     src = df.select(F.col(id_col).alias("id"),
                     F.col(token_col).cast("long").alias("n_tok"))
+    if src.schema["n_tok"].nullable and \
+            src.where(F.col("n_tok").isNull()).limit(1).count():
+        # a NULL count makes its doc's _start (and so seq_id) NULL: the
+        # doc would land in a NULL sequence, outside every invariant
+        raise ValueError(f"{token_col!r} holds NULL token counts; drop or "
+                         f"impute them before calling pack_sequences")
     ranged = (src.repartitionByRange(n_ranges, "id")
                  .withColumn("_pid", F.spark_partition_id())
                  .localCheckpoint(eager=False))

@@ -40,16 +40,18 @@ the reference's errors.collect-to-driver (SchemaDerive.scala:98).
 from __future__ import annotations
 
 import json
-import math
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from schema_guru_spark.core.accumulate_batch import (
+    _enum_order_sensitive,
+    fold_keyed,
+)
 from schema_guru_spark.core.context import SchemaContext
-from schema_guru_spark.core.json_fast import loads as fast_loads
-from schema_guru_spark.core.microschema import ZERO, derive, dumps, loads, merge, render
+from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge, render
 from schema_guru_spark.core.transforms import apply_transforms
 from schema_guru_spark.operators import constraints as C
 from schema_guru_spark.plans.checkpoint import CheckpointManager
@@ -158,16 +160,15 @@ def bucket_expr(n_buckets: int, n_salts: int):
 
 
 def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
-    """mapInPandas fn: per-batch vectorized flag counting + per-doc JSON
-    derivation folded into per-(task, bucket) states."""
+    """mapInPandas fn: per-batch vectorized flag counting + the JSON
+    rows folded into per-(task, bucket) states by ``fold_keyed`` keyed
+    by bucket."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from schema_guru_spark.core.accumulate import gate_error_message
-        from schema_guru_spark.core.accumulate_batch import fold_docs
-
         states: dict[int, dict] = {}
+        json_counts: dict[int, list] = {}
         counters: dict[int, dict] = {}
 
         def bucket_counter(b):
@@ -213,77 +214,27 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
 
             jidx = np.flatnonzero(pdf["lang"].to_numpy() == "json")
             if len(jidx):
-                # unique-doc fast path, ONE factorize per batch (the
-                # monoid stabilizes after one self-merge — see
-                # operators/infer.py). Per-(bucket, doc) multiplicities
-                # come from one np.unique over a fused int key; a doc
-                # repeated across buckets parses once per batch.
-                content = pdf["content"].take(jidx)
-                jbk = bk[jidx]
-                codes, uniques = pd.factorize(content, use_na_sentinel=True)
-                u_width = len(uniques) + 1
-                fused = jbk.astype(np.int64) * u_width + (codes + 1)
-                ukey, kcounts = np.unique(fused, return_counts=True)
-                parsed: list = []
-                parse_err: list = []
-                for text in uniques:
-                    try:
-                        parsed.append(fast_loads(text))
-                        parse_err.append(None)
-                    except (ValueError, TypeError) as e:
-                        parsed.append(None)
-                        parse_err.append(f"invalid JSON: {e}")
-                err_keys: dict[int, str] = {}
-                # per-bucket doc batches: the fold runs once per
-                # (bucket, batch) as a columnar pass (accumulate_batch:
-                # fold == sequential accumulate, law-pinned); a doc with
-                # multiplicity n >= 2 enters twice (one self-merge
-                # stabilizes the monoid — test_merge_self_stabilizes)
-                bucket_docs: dict[int, list] = {}
-                for key, cnt in zip(ukey.tolist(), kcounts.tolist()):
-                    b = key // u_width
-                    code = key % u_width - 1
-                    c = bucket_counter(b)
-                    if code < 0 or parse_err[code] is not None:
-                        c["n_json_err"] += cnt
-                        err_keys[key] = ("null content" if code < 0
-                                         else parse_err[code])
-                        continue
-                    value = parsed[code]
-                    if not isinstance(value, (dict, list)):
-                        c["n_json_err"] += cnt
-                        err_keys[key] = gate_error_message(value)
-                        continue
-                    docs = bucket_docs.get(b)
-                    if docs is None:
-                        docs = bucket_docs[b] = []
-                    docs.append(value)
-                    if cnt > 1:
-                        docs.append(value)
-                    c["n_json_ok"] += cnt
-                for b, docs in bucket_docs.items():
-                    st = states.get(b)
-                    if st is None:
-                        st = states[b] = {}
-                    fold_docs(st, docs, ctx)
-                if err_keys:
+                _, _, errors = fold_keyed(pdf["content"].to_numpy()[jidx],
+                                          bk[jidx], ctx, states, json_counts)
+                if errors:
                     # one row PER OCCURRENCE, each under its own row's
                     # repo — the first-occurrence shortcut misattributed
                     # copies of the same bad text living in other repos
-                    # of the same bucket. One vectorized membership test
-                    # over the batch; repo attribution stays error-only.
+                    # of the same bucket
                     jrepo = pdf["repo"].to_numpy()[jidx]
-                    karr = np.fromiter(err_keys, dtype=np.int64,
-                                       count=len(err_keys))
-                    occ = np.flatnonzero(np.isin(fused, karr))
-                    errs = [(int(fused[i]) // u_width, jrepo[i], "json",
-                             err_keys[int(fused[i])])
-                            for i in occ.tolist()]
-                    e = pd.DataFrame(errs, columns=["bucket", "repo", "lang",
-                                                    "payload"])
-                    e.insert(0, "kind", "violation")
-                    e["n"] = 1
-                    yield e[["kind", "bucket", "repo", "lang", "payload", "n"]]
+                    yield pd.DataFrame({
+                        "kind": "violation",
+                        "bucket": [b for _, b, _ in errors],
+                        "repo": [jrepo[i] for i, _, _ in errors],
+                        "lang": "json",
+                        "payload": [msg for _, _, msg in errors],
+                        "n": 1,
+                    })
+
+        for b, (n_ok, n_err) in json_counts.items():
+            c = bucket_counter(b)
+            c["n_json_ok"] += n_ok
+            c["n_json_err"] += n_err
 
         rows = []
         for b, c in counters.items():
@@ -382,8 +333,7 @@ def validate_repo_table(
     sinks when enabled, so a resumed run sees prior chunks' results too).
     """
     ctx = ctx or SchemaContext.make(0)
-    from schema_guru_spark.operators.infer import (_enum_order_sensitive,
-                                                   _require_commutative)
+    from schema_guru_spark.operators.infer import _require_commutative
     _require_commutative(ctx)  # strict parity mode is order-dependent
     if _enum_order_sensitive(ctx):
         # the enum merge is order-sensitive and _combine_buckets folds

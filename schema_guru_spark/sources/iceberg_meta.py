@@ -58,7 +58,7 @@ import os
 import re
 import uuid
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Any, Optional
 
 from .avro_ocf import read_ocf, write_ocf
 

@@ -27,9 +27,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from schema_guru_spark.core.accumulate_batch import (
+    _enum_order_sensitive,
+    fold_keyed,
+)
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.microschema import (
-    ZERO, derive_text, dumps, loads, merge, render,
+    ZERO, dumps, loads, merge, render,
 )
 from schema_guru_spark.core.transforms import apply_transforms
 
@@ -157,19 +161,18 @@ _OUT_SCHEMA = "key string, schema string, n_ok bigint, n_err bigint"
 def _keyed_state_fn(ctx: SchemaContext, column: str):
     def fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        # the group is one key: fold its rows as the kernel's None key
+        # into the state-store accumulator (a fresh dict, task-private)
         if state.exists:
             st_json, n_ok, n_err = state.get
-            acc = loads(st_json)
+            states = {None: loads(st_json)}
         else:
-            acc, n_ok, n_err = ZERO, 0, 0
+            states, n_ok, n_err = {None: {}}, 0, 0
+        counts = {None: [n_ok, n_err]}
         for pdf in pdfs:
-            for text in pdf[column]:
-                sch, err = derive_text(text if text is not None else "", ctx)
-                if err is not None:
-                    n_err += 1
-                else:
-                    acc = merge(acc, sch, ctx)
-                    n_ok += 1
+            fold_keyed(pdf[column], None, ctx, states, counts)
+        acc = states[None]
+        n_ok, n_err = counts[None]
         state.update((dumps(acc), n_ok, n_err))
         rendered = json.dumps(render(apply_transforms(acc, ctx), ctx),
                               sort_keys=True)
@@ -192,14 +195,13 @@ def keyed_schema_stream(stream_df: DataFrame, column: str, key_col: str,
     state function in shuffle order, and the reference's enum merge is
     order-sensitive (concat-size before distinct), so per-key enums
     would depend on the scheduler. Batch inference handles enum
-    contexts with a partition-ordered fold (operators/infer.py:
+    contexts with a partition-ordered fold (core/accumulate_batch.py:
     _enum_order_sensitive); a stream has no analogous input order to
     pin within a micro-batch group. ``run_incremental_inference`` stays
     enum-capable: each micro-batch runs the (deterministic) batch
     engine and the cumulative fold is sequential in batch order.
     """
-    from schema_guru_spark.operators.infer import (_enum_order_sensitive,
-                                                   _require_commutative)
+    from schema_guru_spark.operators.infer import _require_commutative
     _require_commutative(ctx)
     if _enum_order_sensitive(ctx):
         raise ValueError(

@@ -375,14 +375,14 @@ def test_layout_sidecar_rejects_parameter_mismatch(spark, tmp_path):
 
 
 def test_keyed_infer_parses_each_distinct_doc_once():
-    """VERDICT r02 #5: the per-key phase-1 fold factorizes documents, so
+    """VERDICT r02 #5: the per-key fold kernel factorizes documents, so
     a duplicate-heavy batch costs O(distinct) Python parses, not
-    O(rows) — same fast path as the global derive pass."""
+    O(rows) — the same kernel the global derive pass runs."""
     import pandas as pd
 
+    from schema_guru_spark.core.accumulate_batch import fold_keyed
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.json_fast import loads as fast_loads
-    from schema_guru_spark.operators.infer import _fold_keyed_batch
 
     ctx = SchemaContext.make(0)
     docs = ['{"a": 1}', '{"a": 2, "b": "x"}', "not-json"]
@@ -396,9 +396,8 @@ def test_keyed_infer_parses_each_distinct_doc_once():
         calls["n"] += 1
         return fast_loads(text)
 
-    accs, counts = {}, {}
-    _fold_keyed_batch(accs, counts, pdf, "k", "props", ctx,
-                      loads_fn=counting_loads)
+    accs, counts, _ = fold_keyed(pdf["props"], pdf["k"], ctx,
+                                 loads=counting_loads)
     assert calls["n"] == 3                      # O(distinct), not 600
     assert set(accs) == {"t1", "t2"}
     # ok/err accounting still per ROW: 600 rows, every 3rd is bad json

@@ -212,6 +212,16 @@ def test_topk_rejects_nan_scores(spark):
         SMP.topk_by_score(df, "stratum", "id", "quality", 3)
 
 
+def test_pack_sequences_rejects_null_tokens(spark):
+    """A NULL token count makes its doc's start offset NULL, so the doc
+    would fall into a NULL seq_id outside every conservation invariant:
+    it is refused, whichever range partition holds it."""
+    rows = [(i, 10) for i in range(8)] + [(99, None)]
+    df = spark.createDataFrame(rows, "id long, n_tok long")
+    with pytest.raises(ValueError, match="NULL"):
+        SMP.pack_sequences(df, "id", "n_tok", budget=25, n_ranges=2)
+
+
 def test_stratified_sample_streams_stateless(spark, tmp_path, corpus):
     """stratified_sample is a pure projection+filter, so the SAME
     function applies unchanged to a streaming DataFrame: stream==batch
